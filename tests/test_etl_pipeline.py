@@ -7,6 +7,7 @@ from __future__ import annotations
 import os
 
 import pytest
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import functions as F
 
 from datetime import datetime, timezone
@@ -113,7 +114,7 @@ def test_full_load_publish_and_idempotence(spark, fixture_dirs):
     geo = voters.filter("LALVOTERID='LALCA0000001'").collect()[0]
     assert geo["Residence_Addresses_GeoHash"] == "dp1k0gyx"
 
-    # Re-run: everything marked Loaded -> anti-join leaves nothing.
+    # Re-run: everything marked Loaded -> no pending files.
     assert etl.run_load(spark, files_dir, wh, mfp) == []
 
     # Manifest state
@@ -189,32 +190,162 @@ def test_failed_publish_preserves_previous_snapshot(spark, tmp_path):
     before = {r["LALVOTERID"] for r in etl.read_voters(spark, wh).collect()}
     assert len(before) == 20
 
-    # Second-generation file for the SAME state with a poisoned age
-    # cell: FAILFAST parse throws inside the write job, after the
-    # staging write has begun.
+    # Second-generation file for the SAME state with a poisoned row:
+    # one cell short of its header, so the FAILFAST parse throws inside
+    # the staging write job. Every header column is declared: the CSV
+    # parser checks the cell count only when no column is pruned, and
+    # an undeclared column (UNKNOWN_EXTRA_COL) always is. (A junk int
+    # cell would not fail either: read_tsv try_casts it to NULL.)
     bad = files_dir / "02--TX--20250202.tab"
-    bad.write_text(
-        HEADER + "\n"
-        + "\n".join(_row(i, "TX") for i in range(5)) + "\n"
-        + _row(99, "TX").replace("\tJane\t", "\tJane\t").replace("\t24\t", "\tnot_an_age\t", 1)
-        + "\n"
-    )
-    # Build an unambiguous poisoned row: age column -> junk.
-    cells = _row(99, "TX").split("\t")
-    cells[3] = "definitely_not_an_int"
-    bad.write_text(
-        HEADER + "\n"
-        + "\n".join(_row(i, "TX") for i in range(5)) + "\n"
-        + "\t".join(cells) + "\n"
-    )
-    with pytest.raises(Exception):
-        etl.load_one(spark, str(bad), wh, mfp, expected_lines=7)
+    # drop the last (undeclared) column from the header and every row
+    lines = [ln.rsplit("\t", 1)[0] for ln in [HEADER] + [_row(i, "TX") for i in range(6)]]
+    lines[-1] = lines[-1].rsplit("\t", 1)[0]  # the poisoned row
+    bad.write_text("\n".join(lines) + "\n")
+    with pytest.raises(Py4JJavaError, match="MALFORMED_RECORD_IN_PARSING"):
+        etl.load_voter_file(spark, str(bad), wh, mfp, expected_lines=7)
 
     after = {r["LALVOTERID"] for r in etl.read_voters(spark, wh).collect()}
     assert after == before, "failed publish corrupted the live snapshot"
-    # No stray staging/retired dirs left visible to readers.
+    # No stray staging/retired dirs left visible to readers, and the
+    # failed write's staging dir is gone too.
     visible = [d for d in os.listdir(wh) if not d.startswith((".", "_"))]
     assert visible == ["state=TX"]
+    assert not [d for d in os.listdir(wh) if d.startswith((".staging_", ".retired_"))]
+
+
+def test_unreconciled_load_leaves_live_snapshot(spark, tmp_path):
+    """Reconcile, then swap (load.ts:235-308): a load whose observed
+    count misses the manifest's line count must not replace the live
+    snapshot. It reports what it read, publishes nothing and drops its
+    staging dir."""
+    files_dir = tmp_path / "files"
+    files_dir.mkdir()
+    (files_dir / "01--TX--20250101.tab").write_text(
+        HEADER + "\n" + "\n".join(_row(i, "TX") for i in range(20)) + "\n"
+    )
+    mfp, wh = str(tmp_path / "manifest"), str(tmp_path / "wh")
+    mf.record_files(spark, mfp, [("01--TX--20250101.tab", "TX", 21)])
+    (first,) = etl.run_load(spark, str(files_dir), wh, mfp)
+    assert first.reconciled and first.rows_published == 20
+
+    (files_dir / "02--TX--20250202.tab").write_text(
+        HEADER + "\n" + "\n".join(_row(i, "TX") for i in range(100, 103)) + "\n"
+    )
+    mf.record_files(spark, mfp, [("02--TX--20250202.tab", "TX", 50_000)])
+    (gated,) = etl.run_load(spark, str(files_dir), wh, mfp)
+    assert gated.filename == "02--TX--20250202.tab"
+    assert not gated.reconciled
+    assert (gated.rows_read, gated.rows_published) == (3, 0)
+    assert etl.read_voters(spark, wh).filter("state = 'TX'").count() == 20
+    assert not [d for d in os.listdir(wh) if d.startswith(".staging_")]
+    loaded = {r["Filename"]: r["Loaded"] for r in mf.read_manifest(spark, mfp).collect()}
+    assert loaded == {"01--TX--20250101.tab": True, "02--TX--20250202.tab": False}
+
+
+class _RenameFailsFS:
+    """A Hadoop FS whose promote renames (staging -> live) report
+    failure the way Hadoop does: by returning false."""
+
+    def __init__(self, real):
+        self._real = real
+
+    def exists(self, p):
+        return self._real.exists(p)
+
+    def delete(self, p, rec):
+        return self._real.delete(p, rec)
+
+    def rename(self, src, dst):
+        if "staging_" in src.toString():
+            return False
+        return self._real.rename(src, dst)
+
+
+def test_promote_rename_returning_false_keeps_previous_versions(
+    spark, tmp_path, monkeypatch
+):
+    # Every FS mutation of the two blue/green swaps checks its result:
+    # a promote whose rename returns false must raise, roll the parked
+    # copy back and leave both the voter snapshot and the manifest
+    # history readable.
+    files_dir = tmp_path / "files"
+    files_dir.mkdir()
+    (files_dir / "01--TX--20250101.tab").write_text(
+        HEADER + "\n" + "\n".join(_row(i, "TX") for i in range(20)) + "\n"
+    )
+    mfp, wh = str(tmp_path / "manifest"), str(tmp_path / "wh")
+    mf.record_files(spark, mfp, [("01--TX--20250101.tab", "TX", 21)])
+    etl.run_load(spark, str(files_dir), wh, mfp)
+    voters_before = sorted(r["LALVOTERID"] for r in etl.read_voters(spark, wh).collect())
+    history_before = sorted(mf.read_manifest(spark, mfp).collect())
+    assert len(voters_before) == 20 and history_before[0]["Loaded"]
+
+    (files_dir / "02--TX--20250202.tab").write_text(
+        HEADER + "\n" + "\n".join(_row(i, "TX") for i in range(5)) + "\n"
+    )
+    real_fs = mf._hadoop_fs
+    monkeypatch.setattr(
+        mf, "_hadoop_fs", lambda sp, parent: _RenameFailsFS(real_fs(sp, parent))
+    )
+    with pytest.raises(IOError, match="could not promote"):
+        etl.load_voter_file(
+            spark, str(files_dir / "02--TX--20250202.tab"), wh, mfp, expected_lines=6
+        )
+    with pytest.raises(IOError, match="could not promote"):
+        mf.mark_loaded(spark, mfp, "02--TX--20250202.tab")
+    monkeypatch.setattr(mf, "_hadoop_fs", real_fs)
+
+    voters_after = sorted(r["LALVOTERID"] for r in etl.read_voters(spark, wh).collect())
+    assert voters_after == voters_before
+    assert sorted(mf.read_manifest(spark, mfp).collect()) == history_before
+    leftovers = [
+        n for d in (wh, str(tmp_path)) for n in os.listdir(d)
+        if n.startswith((".staging_", ".retired_", ".mf_"))
+    ]
+    assert leftovers == [], leftovers
+
+
+def test_manifest_control_plane_submits_no_jobs(spark, tmp_path):
+    # The load path's manifest operations are driver-side
+    # read-modify-writes: none of them may submit a Spark job.
+    mfp = str(tmp_path / "manifest")
+    files = [(1, "01--CA--20250101.tab", "CA"), (2, "02--TX--20250101.tab", "TX")]
+    sc = spark.sparkContext
+    group = f"manifest_zero_jobs_{os.getpid()}"
+    sc.setJobGroup(group, "manifest control plane")
+    try:
+        mf.record_files(spark, mfp, [(n, st, 6) for _, n, st in files])
+        assert mf.recorded_lines(spark, mfp, "02--TX--20250101.tab") == 6
+        mf.mark_loaded(spark, mfp, "01--CA--20250101.tab")
+        page = mf.pending_files(spark, mfp, files, after_seq=None, limit=10)
+        jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert page == [files[1]]
+    assert jobs == [], f"manifest operations submitted Spark jobs {jobs}"
+
+
+def test_pyarrow_reader_reads_spark_written_manifest(spark, tmp_path):
+    # Manifests written by the Spark writer (INT96 timestamps, _SUCCESS
+    # and .crc side files, several part files) stay readable — and
+    # updatable — through the driver-side reader.
+    mfp = str(tmp_path / "manifest")
+    ts = datetime(2025, 1, 2, 3, 4, 5, 678901, tzinfo=timezone.utc)
+    spark.createDataFrame(
+        [("01--CA--20250101.tab", "CA", 10, True, ts),
+         ("02--TX--20250101.tab", "TX", 7, False, ts)],
+        manifest_struct(),
+    ).repartition(2).write.parquet(mfp)
+    assert mf.recorded_lines(spark, mfp, "02--TX--20250101.tab") == 7
+    files = [(1, "01--CA--20250101.tab", "CA"), (2, "02--TX--20250101.tab", "TX")]
+    assert mf.pending_files(spark, mfp, files) == [files[1]]
+    mf.mark_loaded(spark, mfp, "02--TX--20250101.tab")
+    rows = sorted(mf.read_manifest(spark, mfp).collect())
+    assert [(r["Filename"], r["Lines"], r["Loaded"]) for r in rows] == [
+        ("01--CA--20250101.tab", 10, True),
+        ("02--TX--20250101.tab", 7, True),
+    ]
+    assert {r["updatedAt"].astimezone(timezone.utc) for r in rows} == {ts}
 
 
 def test_run_load_pages_pending_files(spark, tmp_path, monkeypatch):
@@ -393,7 +524,7 @@ def test_overwrite_small_spark_fallback_for_exotic_schema(spark, tmp_path):
     df = spark.createDataFrame(
         [("a", [1, 2]), ("b", [3])], "k string, vals array<int>"
     )
-    _overwrite_small(df, path)
+    _overwrite_small(spark, df.collect(), df.schema, path)
     back = spark.read.parquet(path)
     assert sorted((r["k"], r["vals"]) for r in back.collect()) == [
         ("a", [1, 2]),
@@ -401,7 +532,7 @@ def test_overwrite_small_spark_fallback_for_exotic_schema(spark, tmp_path):
     ]
     # overwrite again (exercises the retire/promote pair on an
     # existing live dir)
-    _overwrite_small(back.filter("k = 'a'"), path)
+    _overwrite_small(spark, back.filter("k = 'a'").collect(), back.schema, path)
     assert spark.read.parquet(path).count() == 1
 
 
@@ -613,9 +744,10 @@ def test_overwrite_small_fast_path_matches_spark_writer_on_nonutc_os_tz(
     try:
         fast = str(tmp_path / "mf_fast")
         slow = str(tmp_path / "mf_slow")
-        _overwrite_small(df, fast)
+        rows = df.collect()  # naive driver-OS-local wall times
+        _overwrite_small(spark, rows, df.schema, fast)
         monkeypatch.setattr(mf, "_arrow_type", lambda dt: None)  # force fallback
-        _overwrite_small(df, slow)
+        _overwrite_small(spark, rows, df.schema, slow)
         monkeypatch.undo()
     finally:
         if old_tz is None:

@@ -11,7 +11,10 @@ loops); these tests keep it that way.
 
 from __future__ import annotations
 
+import io
 import os
+import re
+import tokenize
 
 import pytest
 from pyspark.sql import functions as F
@@ -28,6 +31,32 @@ def _py_sources():
                 yield os.path.join(dirpath, name)
 
 
+_RAW_LOCAL_CHECKPOINT = re.compile(r"\.\s*localCheckpoint\s*\(")
+
+
+def _raw_local_checkpoint_lines(source: str) -> list[int]:
+    """Line numbers of ``.localCheckpoint(`` calls in ``source`` outside
+    comments. Comments are found with ``tokenize``, so a ``#`` inside a
+    string literal does not hide the rest of its line."""
+    lines = source.splitlines()
+    for tok in tokenize.generate_tokens(io.StringIO(source).readline):
+        if tok.type == tokenize.COMMENT:
+            (row, col) = tok.start
+            lines[row - 1] = lines[row - 1][:col]
+    return [i for i, line in enumerate(lines, 1) if _RAW_LOCAL_CHECKPOINT.search(line)]
+
+
+def test_raw_local_checkpoint_scan_strips_only_comments():
+    src = (
+        'df = x.localCheckpoint()\n'
+        'y = "#"; df = x.localCheckpoint()\n'
+        '# df = x.localCheckpoint()\n'
+        'df = x  # .localCheckpoint() in a comment\n'
+        'df = x. localCheckpoint (eager=True)\n'
+    )
+    assert _raw_local_checkpoint_lines(src) == [1, 2, 5]
+
+
 def test_no_raw_local_checkpoint_outside_session():
     # The only permitted localCheckpoint call sites are inside
     # session.py (the env-switch implementation itself). Everything
@@ -39,10 +68,7 @@ def test_no_raw_local_checkpoint_outside_session():
         if os.path.basename(path) == "session.py":
             continue
         with open(path) as f:
-            for lineno, line in enumerate(f, 1):
-                code = line.split("#", 1)[0]
-                if ".localCheckpoint(" in code:
-                    offenders.append(f"{path}:{lineno}")
+            offenders += [f"{path}:{n}" for n in _raw_local_checkpoint_lines(f.read())]
     assert not offenders, (
         "raw localCheckpoint call sites bypass the durable-checkpoint "
         f"switch — route through session.materialize: {offenders}"

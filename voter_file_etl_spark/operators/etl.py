@@ -3,14 +3,21 @@
 Reference flow (load.ts:48-338): list files -> skip DEMOGRAPHIC ->
 skip already-loaded -> parse/project/cast -> batched insert with PK
 dedup -> count reconciliation -> atomic blue/green publish -> mark
-manifest. Here the whole thing is one declarative plan per state:
+manifest. Here the data plane is one declarative plan per file:
 
   read_tsv (projection+cast+null-normalization, FAILFAST)
     -> enrich (geohash + city cleanup, load-s3.ts:186-196)
     -> dropDuplicates(PK)          (createMany skipDuplicates)
     -> observe(count)              (reconciliation without a 2nd scan)
-    -> stage to hidden dir, then RENAME-swap live (blue/green)
+    -> stage to hidden dir
+    -> reconcile, then RENAME-swap live (blue/green)
     -> mark manifest Loaded
+
+The control plane (directory listing, the already-loaded skip, the
+manifest lookups and updates) runs on the driver and submits no Spark
+jobs: the manifest is O(files) rows read and written with pyarrow
+(sources/manifest.py), so the only jobs a load submits are its own
+data-plane jobs.
 
 Scale notes: per-state loads are independent jobs; within a load the
 only wide op is dropDuplicates (hash shuffle on the PK) — everything
@@ -23,11 +30,13 @@ previous snapshot — the opposite of the reference's transactional
 rename (load.ts:256-308, Temp renamed over live inside a
 transaction). The load therefore writes to a hidden staging dir
 (invisible to readers — Spark's file listing skips dot-prefixed
-paths) and goes live only via Hadoop-FS renames after the write has
-fully committed: a job failure at any point leaves the old snapshot
-being served. The rename pair (park old, promote new) is atomic per
-rename on HDFS/local FS; a crash exactly between them leaves both
-versions on disk, recoverable — never silent loss. With
+paths), reconciles the observed count against the manifest, and goes
+live only via checked Hadoop-FS renames after both the write and the
+reconciliation succeeded: a job failure or a reconciliation miss
+leaves the old snapshot being served. The rename pair (park old,
+promote new) is atomic per rename on HDFS/local FS; a rename that
+reports failure is rolled back, and a crash exactly between them
+leaves both versions on disk, recoverable — never silent loss. With
 Delta/Iceberg the same flow is one transactional replace.
 """
 
@@ -51,6 +60,10 @@ PK = "LALVOTERID"
 
 @dataclass
 class LoadResult:
+    """One file's load. A gated load (``reconciled=False``) published
+    nothing: ``rows_read`` is what it read, ``rows_published`` is 0 and
+    ``published_path`` still serves the previous snapshot."""
+
     filename: str
     state: str
     rows_read: int
@@ -113,29 +126,6 @@ def dedup_pk(df: DataFrame) -> DataFrame:
     )
 
 
-def list_load_files(spark: SparkSession, files_dir: str) -> DataFrame:
-    """Directory scan -> (filename, state, seq), .tab only, sorted by
-    numeric prefix, DEMOGRAPHIC files excluded (utils.ts:10-29,
-    load.ts:94-96)."""
-    names = [
-        n
-        for n in sorted(os.listdir(files_dir))
-        if n.endswith(".tab")
-    ]
-    df = spark.createDataFrame([(n,) for n in names], "filename string")
-    return (
-        df.filter(~F.col("filename").contains("DEMOGRAPHIC"))
-        .select(
-            "filename",
-            F.split_part(F.col("filename"), F.lit("--"), F.lit(2)).alias("state"),
-            F.split_part(F.col("filename"), F.lit("--"), F.lit(1))
-            .cast("int")
-            .alias("seq"),
-        )
-        .orderBy("seq")
-    )
-
-
 def load_voter_file(
     spark: SparkSession,
     file_path: str,
@@ -143,7 +133,7 @@ def load_voter_file(
     manifest_path: str,
     expected_lines: int | None = None,
 ) -> LoadResult:
-    """Load one state file end-to-end with reconciliation + publish."""
+    """Load one state file end-to-end: stage, reconcile, then publish."""
     filename = os.path.basename(file_path)
     state = filename.split("--")[1]
 
@@ -157,54 +147,52 @@ def load_voter_file(
 
     # Blue/green publish (load.ts:256-308): write the new snapshot to
     # a hidden staging dir (a failure here leaves the live dir
-    # untouched), then promote it with atomic FS renames. Hadoop FS
-    # API, not os.rename, so the same code serves file://, hdfs://
-    # and s3a:// warehouses.
+    # untouched), reconcile, then promote it with checked Hadoop-FS
+    # renames — not os.rename, so the same code serves file://,
+    # hdfs:// and s3a:// warehouses.
     import uuid
 
     published_path = os.path.join(warehouse_dir, f"state={state}")
     run_id = uuid.uuid4().hex[:12]
     staging_path = os.path.join(warehouse_dir, f".staging_{state}_{run_id}")
-    df.write.mode("overwrite").parquet(staging_path)
-    rows_published = int(obs.get["rows"])
-
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    fs = jvm.org.apache.hadoop.fs.Path(warehouse_dir).getFileSystem(hconf)
-
-    def _p(path: str):
-        return jvm.org.apache.hadoop.fs.Path(path)
-
     retired_path = os.path.join(warehouse_dir, f".retired_{state}_{run_id}")
-    if fs.exists(_p(published_path)):
-        fs.rename(_p(published_path), _p(retired_path))  # park old (atomic)
-    fs.rename(_p(staging_path), _p(published_path))      # promote new (atomic)
-    fs.delete(_p(retired_path), True)                    # old version GC
+    fs = mf._hadoop_fs(spark, warehouse_dir)
+    staging = mf._hpath(spark, staging_path)
+    try:
+        df.write.mode("overwrite").parquet(staging_path)
+    except BaseException:
+        fs.delete(staging, True)  # a failed job can leave its dir behind
+        raise
+    rows_read = int(obs.get["rows"])
 
-    # Reconciliation (load.ts:235-254): published count vs manifest
-    # line count (header excluded), tolerance 1000.
+    # Reconciliation BEFORE the swap (load.ts:235-254): observed count
+    # vs manifest line count (header excluded), tolerance 1000. A miss
+    # gates the publish: the staged copy is dropped, live stays as is.
     if expected_lines is None:
         lines = mf.recorded_lines(spark, manifest_path, filename)
-        expected_lines = lines if lines is not None else rows_published + 1
+        expected_lines = lines if lines is not None else rows_read + 1
     expected_rows = max(expected_lines - 1, 0)  # minus header line
-    reconciled = rows_published >= expected_rows - COUNT_TOLERANCE
+    reconciled = rows_read >= expected_rows - COUNT_TOLERANCE
     if reconciled:
+        mf.promote_staged(spark, staging_path, published_path, retired_path)
         mf.mark_loaded(spark, manifest_path, filename)
+    elif not fs.delete(staging, True):
+        raise IOError(f"could not drop gated staging dir {staging_path}")
 
     return LoadResult(
         filename=filename,
         state=state,
-        rows_read=rows_published,
-        rows_published=rows_published,
+        rows_read=rows_read,
+        rows_published=rows_read if reconciled else 0,
         reconciled=reconciled,
         published_path=published_path,
     )
 
 
-# Driver-side bound on the pending-file list: run_load fetches work in
-# seq-ordered batches of this size (a cursor on seq), so a
-# million-file manifest never materializes on the driver — memory is
-# O(batch), not O(manifest). 10k (filename, state, seq) rows is ~1 MB.
+# Page size of the pending-file list: run_load takes work in
+# seq-ordered pages of this size (a cursor on seq) and re-reads the
+# manifest's loaded set between pages, so one round's lane fan-out and
+# result list stay O(page) however many files the directory holds.
 _PENDING_BATCH = 10_000
 
 # Concurrent per-state load lanes. The reference's ordering contract
@@ -231,42 +219,48 @@ def run_load(
     load each remaining file in numeric order within its state, states
     in parallel.
 
-    The pending list is consumed through a seq cursor in
-    ``_PENDING_BATCH``-row pages (bounded collect — see the constant's
-    note), strictly advancing, so the loop terminates in
-    ceil(pending / batch) rounds even when a file fails reconciliation
-    and stays unloaded in the manifest. File naming guarantees unique
-    seq prefixes (utils.ts:18-23 sorts on them), so a strict cursor
-    skips nothing. A state whose files span a page boundary stays
-    ordered: pages are processed one at a time, lanes join at each
-    boundary.
+    The control plane runs on the driver and submits no Spark jobs: the
+    directory is listed once, and each pending page is computed in
+    Python from that listing and the manifest's loaded set
+    (``mf.pending_files``). Pages are consumed through a seq cursor in
+    ``_PENDING_BATCH``-file pages, strictly advancing, so the loop
+    terminates in ceil(pending / batch) rounds even when a file fails
+    reconciliation and stays unloaded in the manifest. File naming
+    guarantees unique seq prefixes (utils.ts:18-23 sorts on them), so
+    a strict cursor skips nothing. A state whose files span a page
+    boundary stays ordered: pages are processed one at a time, lanes
+    join at each boundary.
     """
     from concurrent.futures import ThreadPoolExecutor
 
-    files = list_load_files(spark, files_dir)
+    # (seq, filename, state), .tab only, DEMOGRAPHIC excluded, in
+    # numeric-prefix order (utils.ts:10-29, load.ts:94-96).
+    names = [
+        n for n in os.listdir(files_dir)
+        if n.endswith(".tab") and "DEMOGRAPHIC" not in n
+    ]
+    files = sorted((int(n.split("--")[0]), n, n.split("--")[1]) for n in names)
     results: list[LoadResult] = []
     last_seq = None
     while True:
-        manifest = mf.read_manifest(spark, manifest_path)
-        pend = mf.pending_files(files, manifest)
-        if last_seq is not None:
-            pend = pend.filter(F.col("seq") > last_seq)
-        batch = pend.orderBy("seq").limit(_PENDING_BATCH).collect()
+        batch = mf.pending_files(
+            spark, manifest_path, files, after_seq=last_seq, limit=_PENDING_BATCH
+        )
         if not batch:
             return results
-        lanes: dict[str, list] = {}
-        for row in batch:
-            lanes.setdefault(row["state"], []).append(row)
+        lanes: dict[str, list[str]] = {}
+        for _, name, state in batch:
+            lanes.setdefault(state, []).append(name)
 
-        def _run_lane(rows: list) -> list[LoadResult]:
+        def _run_lane(names: list[str]) -> list[LoadResult]:
             return [
                 load_voter_file(
                     spark,
-                    os.path.join(files_dir, r["filename"]),
+                    os.path.join(files_dir, name),
                     warehouse_dir,
                     manifest_path,
                 )
-                for r in rows
+                for name in names
             ]
 
         if len(lanes) == 1:
@@ -284,7 +278,7 @@ def run_load(
                 key=lambda r: int(r.filename.split("--")[0]),
             )
         )
-        last_seq = batch[-1]["seq"]
+        last_seq = batch[-1][0]
 
 
 def read_voters(spark: SparkSession, warehouse_dir: str) -> DataFrame:
