@@ -15,7 +15,11 @@ from datetime import datetime, timezone
 from voter_file_etl_spark.operators import etl
 from voter_file_etl_spark.schema import manifest_struct
 from voter_file_etl_spark.sources import manifest as mf
+from voter_file_etl_spark.sources import publish
 from voter_file_etl_spark.sources.tsv import read_tsv
+
+# What a publish of a manifest at <dir>/manifest leaves next to it.
+_MF_LEFTOVER = (".staging_manifest_", ".retired_manifest_")
 
 HEADER = "\t".join(
     [
@@ -283,9 +287,9 @@ def test_promote_rename_returning_false_keeps_previous_versions(
     (files_dir / "02--TX--20250202.tab").write_text(
         HEADER + "\n" + "\n".join(_row(i, "TX") for i in range(5)) + "\n"
     )
-    real_fs = mf._hadoop_fs
+    real_fs = publish._hadoop_fs
     monkeypatch.setattr(
-        mf, "_hadoop_fs", lambda sp, parent: _RenameFailsFS(real_fs(sp, parent))
+        publish, "_hadoop_fs", lambda sp, parent: _RenameFailsFS(real_fs(sp, parent))
     )
     with pytest.raises(IOError, match="could not promote"):
         etl.load_voter_file(
@@ -293,14 +297,14 @@ def test_promote_rename_returning_false_keeps_previous_versions(
         )
     with pytest.raises(IOError, match="could not promote"):
         mf.mark_loaded(spark, mfp, "02--TX--20250202.tab")
-    monkeypatch.setattr(mf, "_hadoop_fs", real_fs)
+    monkeypatch.setattr(publish, "_hadoop_fs", real_fs)
 
     voters_after = sorted(r["LALVOTERID"] for r in etl.read_voters(spark, wh).collect())
     assert voters_after == voters_before
     assert sorted(mf.read_manifest(spark, mfp).collect()) == history_before
     leftovers = [
         n for d in (wh, str(tmp_path)) for n in os.listdir(d)
-        if n.startswith((".staging_", ".retired_", ".mf_"))
+        if n.startswith((".staging_", ".retired_"))
     ]
     assert leftovers == [], leftovers
 
@@ -508,8 +512,8 @@ def test_manifest_overwrite_failure_preserves_live_copy(spark, tmp_path, monkeyp
     assert after == before  # live manifest intact, Loaded still False
     assert not after[0]["Loaded"]
     # VERDICT r8 #7: every manifest crash test pins the orphan sweep —
-    # the failed staging write left no .mf_* control-plane dirs behind
-    leftovers = [n for n in os.listdir(str(tmp_path)) if n.startswith(".mf_")]
+    # the failed staging write left no manifest staging/retired dirs behind
+    leftovers = [n for n in os.listdir(str(tmp_path)) if n.startswith(_MF_LEFTOVER)]
     assert leftovers == [], f"crash leftovers not swept: {leftovers}"
 
 
@@ -573,9 +577,9 @@ def test_run_load_lane_failure_propagates(spark, tmp_path, monkeypatch):
     published = read_voters(spark, wh)
     assert published.filter("state = 'CA'").count() == 3
     assert published.filter("state = 'TX'").count() == 3
-    # VERDICT r8 #7: the lane failure + recovery cycle leaves no .mf_*
-    # control-plane dirs next to the manifest
-    leftovers = [n for n in os.listdir(str(tmp_path)) if n.startswith(".mf_")]
+    # VERDICT r8 #7: the lane failure + recovery cycle leaves no
+    # manifest staging/retired dirs next to the manifest
+    leftovers = [n for n in os.listdir(str(tmp_path)) if n.startswith(_MF_LEFTOVER)]
     assert leftovers == [], f"crash leftovers not swept: {leftovers}"
 
 
@@ -585,12 +589,12 @@ def test_promote_crash_between_renames_restores_history(spark, tmp_path, monkeyp
     # retired) but BEFORE rename(staging -> live): no live dir remains,
     # and before the fix read_manifest returned an EMPTY manifest —
     # silently dropping the whole load history. read_manifest must now
-    # restore the newest .mf_retired_* copy.
+    # restore the newest .retired_manifest_* copy.
     mfp = str(tmp_path / "manifest")
     mf.record_files(spark, mfp, [("01--CA--20250101.tab", "CA", 10)])
     before = sorted(mf.read_manifest(spark, mfp).collect())
 
-    real_fs = mf._hadoop_fs
+    real_fs = publish._hadoop_fs
 
     class CrashFS:
         def __init__(self, real):
@@ -603,12 +607,12 @@ def test_promote_crash_between_renames_restores_history(spark, tmp_path, monkeyp
             return self._real.delete(p, rec)
 
         def rename(self, src, dst):
-            if ".mf_staging_" in src.toString():
+            if ".staging_manifest_" in src.toString():
                 raise RuntimeError("simulated crash between promote renames")
             return self._real.rename(src, dst)
 
     monkeypatch.setattr(
-        mf, "_hadoop_fs", lambda sp, parent: CrashFS(real_fs(sp, parent))
+        publish, "_hadoop_fs", lambda sp, parent: CrashFS(real_fs(sp, parent))
     )
     with pytest.raises(Exception, match="simulated crash"):
         mf.mark_loaded(spark, mfp, "01--CA--20250101.tab")
@@ -616,15 +620,15 @@ def test_promote_crash_between_renames_restores_history(spark, tmp_path, monkeyp
     # and the orphan staging both present
     assert not os.path.isdir(mfp)
     leftovers = os.listdir(str(tmp_path))
-    assert any(n.startswith(".mf_retired_") for n in leftovers)
-    assert any(n.startswith(".mf_staging_") for n in leftovers)
-    monkeypatch.setattr(mf, "_hadoop_fs", real_fs)
+    assert any(n.startswith(".retired_manifest_") for n in leftovers)
+    assert any(n.startswith(".staging_manifest_") for n in leftovers)
+    monkeypatch.setattr(publish, "_hadoop_fs", real_fs)
     after = sorted(mf.read_manifest(spark, mfp).collect())
     assert after == before  # history restored, Loaded still False
     assert os.path.isdir(mfp)
     # recovery sweeps EVERY crash leftover — retired AND the orphan
     # staging dir whose promote died (ADVICE r7 #2)
-    mf_leftovers = [n for n in os.listdir(str(tmp_path)) if n.startswith(".mf_")]
+    mf_leftovers = [n for n in os.listdir(str(tmp_path)) if n.startswith(_MF_LEFTOVER)]
     assert mf_leftovers == [], f"crash leftovers not swept: {mf_leftovers}"
     # and the manifest is fully operational again
     mf.mark_loaded(spark, mfp, "01--CA--20250101.tab")
@@ -778,8 +782,8 @@ def test_overwrite_small_fast_path_matches_spark_writer_on_nonutc_os_tz(
 def test_overwrite_small_staging_failure_leaves_no_orphan_dir(
     spark, tmp_path, monkeypatch
 ):
-    # ADVICE r6 #4: a failed staging write must not leave .mf_staging_*
-    # dirs accumulating next to the manifest.
+    # ADVICE r6 #4: a failed staging write must not leave
+    # .staging_manifest_* dirs accumulating next to the manifest.
     import pyarrow.parquet as pq
 
     mfp = str(tmp_path / "manifest")
@@ -792,7 +796,7 @@ def test_overwrite_small_staging_failure_leaves_no_orphan_dir(
     with pytest.raises(OSError):
         mf.mark_loaded(spark, mfp, "01--CA--20250101.tab")
     monkeypatch.undo()
-    leftovers = [n for n in os.listdir(str(tmp_path)) if n.startswith(".mf_")]
+    leftovers = [n for n in os.listdir(str(tmp_path)) if n.startswith(_MF_LEFTOVER)]
     assert leftovers == [], f"orphan control-plane dirs: {leftovers}"
 
 

@@ -6,7 +6,8 @@ executor loss at scale loses the blocks and fails the job even when
 the operator *thought* it had opted into durability via
 $SPARK_GRAFT_CHECKPOINT_DIR. The fix routes every materialization
 through ``session.materialize`` (or ``iter_checkpoint`` for iterative
-loops); these tests keep it that way.
+loops); these tests keep it that way. The same scan keeps every
+directory swap inside ``sources/publish.py``.
 """
 
 from __future__ import annotations
@@ -32,10 +33,11 @@ def _py_sources():
 
 
 _RAW_LOCAL_CHECKPOINT = re.compile(r"\.\s*localCheckpoint\s*\(")
+_RAW_RENAME = re.compile(r"(?:\bos\s*\.\s*(?:rename|replace)|fs\s*\.\s*rename)\s*\(")
 
 
-def _raw_local_checkpoint_lines(source: str) -> list[int]:
-    """Line numbers of ``.localCheckpoint(`` calls in ``source`` outside
+def _raw_call_lines(source: str, pattern: re.Pattern) -> list[int]:
+    """Line numbers of ``pattern`` matches in ``source`` outside
     comments. Comments are found with ``tokenize``, so a ``#`` inside a
     string literal does not hide the rest of its line."""
     lines = source.splitlines()
@@ -43,7 +45,7 @@ def _raw_local_checkpoint_lines(source: str) -> list[int]:
         if tok.type == tokenize.COMMENT:
             (row, col) = tok.start
             lines[row - 1] = lines[row - 1][:col]
-    return [i for i, line in enumerate(lines, 1) if _RAW_LOCAL_CHECKPOINT.search(line)]
+    return [i for i, line in enumerate(lines, 1) if pattern.search(line)]
 
 
 def test_raw_local_checkpoint_scan_strips_only_comments():
@@ -54,7 +56,17 @@ def test_raw_local_checkpoint_scan_strips_only_comments():
         'df = x  # .localCheckpoint() in a comment\n'
         'df = x. localCheckpoint (eager=True)\n'
     )
-    assert _raw_local_checkpoint_lines(src) == [1, 2, 5]
+    assert _raw_call_lines(src, _RAW_LOCAL_CHECKPOINT) == [1, 2, 5]
+    renames = (
+        'os.rename(a, b)\n'
+        'y = "#"; fs.rename(a, b)\n'
+        '# os.replace(a, b)\n'
+        'os . replace (a, b)\n'
+        'df.withColumnRenamed("a", "b")\n'
+        'ok = self._fs.rename(p, q)\n'
+        'x = chaos.rename(a)  # fs.rename(a, b)\n'
+    )
+    assert _raw_call_lines(renames, _RAW_RENAME) == [1, 2, 4, 6]
 
 
 def test_no_raw_local_checkpoint_outside_session():
@@ -68,10 +80,29 @@ def test_no_raw_local_checkpoint_outside_session():
         if os.path.basename(path) == "session.py":
             continue
         with open(path) as f:
-            offenders += [f"{path}:{n}" for n in _raw_local_checkpoint_lines(f.read())]
+            offenders += [
+                f"{path}:{n}" for n in _raw_call_lines(f.read(), _RAW_LOCAL_CHECKPOINT)
+            ]
     assert not offenders, (
         "raw localCheckpoint call sites bypass the durable-checkpoint "
         f"switch — route through session.materialize: {offenders}"
+    )
+
+
+def test_no_raw_rename_outside_publish():
+    # A staged directory replaces a live one only through
+    # sources/publish.py (checked Hadoop-FS renames, rollback, crash
+    # recovery). A raw rename elsewhere is a hand-rolled swap: driver-
+    # local only (os.*) or unchecked (a Hadoop rename returns false).
+    offenders = []
+    for path in _py_sources():
+        if os.path.relpath(path, PKG) == os.path.join("sources", "publish.py"):
+            continue
+        with open(path) as f:
+            offenders += [f"{path}:{n}" for n in _raw_call_lines(f.read(), _RAW_RENAME)]
+    assert not offenders, (
+        "raw rename call sites outside sources/publish.py — publish "
+        f"through publish.publish_swap/promote: {offenders}"
     )
 
 

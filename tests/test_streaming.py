@@ -155,6 +155,55 @@ def test_upsert_sink_rewrites_only_touched_buckets(spark, tmp_path):
     assert len(row) == 1 and row[0]["event_id"] == 9001 and row[0]["us"] == 9999
 
 
+class _PromoteFailsFS:
+    """A Hadoop FS whose staged-bucket promote renames (stage -> live)
+    report failure the way Hadoop does: by returning false."""
+
+    def __init__(self, real):
+        self._real = real
+
+    def __getattr__(self, name):
+        return getattr(self._real, name)
+
+    def rename(self, src, dst):
+        if "/stage_b" in src.toString():
+            return False
+        return self._real.rename(src, dst)
+
+
+def test_upsert_sink_rename_false_keeps_bucket(spark, tmp_path, monkeypatch):
+    """A bucket promote whose rename returns false must raise and leave
+    every bucket serving its pre-batch rows: the parked live bucket is
+    renamed back, never deleted as if the promote had worked."""
+    import os
+
+    from voter_file_etl_spark.sources import publish
+    from voter_file_etl_spark.streaming.sinks import upsert_merge_batch
+
+    work = str(tmp_path / "bucketed")
+    snap = os.path.join(work, "snapshot")
+    os.makedirs(work)
+    cols = ["event_id", "us", "user_id", "event_type", "value"]
+    base = spark.createDataFrame(
+        [(i, 1000 + i, i, "click", float(i)) for i in range(200)], cols
+    )
+    upsert_merge_batch(spark, snap, work, base, 0)
+    before = sorted(tuple(r) for r in spark.read.parquet(snap).collect())
+    assert len(before) == 200
+
+    real_fs = publish._hadoop_fs
+    monkeypatch.setattr(
+        publish, "_hadoop_fs", lambda sp, p: _PromoteFailsFS(real_fs(sp, p))
+    )
+    batch = spark.createDataFrame([(9001, 9999, 7, "click", 99.0)], cols)
+    with pytest.raises(IOError, match="could not promote"):
+        upsert_merge_batch(spark, snap, work, batch, 1)
+    monkeypatch.undo()
+
+    after = sorted(tuple(r) for r in spark.read.parquet(snap).collect())
+    assert after == before
+
+
 def test_transform_with_state_gated_on_protobuf(spark, sf_dir):
     # st15 prefers Spark 4's transformWithStateInPandas (whose
     # driver<->worker protocol needs google.protobuf) and falls back

@@ -28,16 +28,17 @@ Publish durability: a bare `mode("overwrite")` DELETES the live
 directory before the job commits, so a failed load would destroy the
 previous snapshot — the opposite of the reference's transactional
 rename (load.ts:256-308, Temp renamed over live inside a
-transaction). The load therefore writes to a hidden staging dir
+transaction). The load therefore publishes through
+``sources/publish.py:publish_swap``, the one blue/green primitive
+every publisher in the engine shares: it writes a hidden staging dir
 (invisible to readers — Spark's file listing skips dot-prefixed
-paths), reconciles the observed count against the manifest, and goes
-live only via checked Hadoop-FS renames after both the write and the
-reconciliation succeeded: a job failure or a reconciliation miss
-leaves the old snapshot being served. The rename pair (park old,
-promote new) is atomic per rename on HDFS/local FS; a rename that
-reports failure is rolled back, and a crash exactly between them
-leaves both versions on disk, recoverable — never silent loss. With
-Delta/Iceberg the same flow is one transactional replace.
+paths), runs the reconciliation as its gate, and goes live only via
+checked Hadoop-FS renames after both succeeded: a job failure or a
+reconciliation miss leaves the old snapshot being served. The rename
+pair (park old, promote new) is atomic per rename on HDFS/local FS; a
+rename that reports failure is rolled back, and a crash exactly
+between them leaves both versions on disk, recoverable — never silent
+loss. With Delta/Iceberg the same flow is one transactional replace.
 """
 
 from __future__ import annotations
@@ -52,6 +53,7 @@ from voter_file_etl_spark.functions.geohash import geohash_text_col
 from voter_file_etl_spark.registry import register
 from voter_file_etl_spark.schema import GEOHASH_COLUMN
 from voter_file_etl_spark.sources import manifest as mf
+from voter_file_etl_spark.sources import publish
 from voter_file_etl_spark.sources.tsv import read_tsv
 
 COUNT_TOLERANCE = 1000  # load.ts:240
@@ -145,46 +147,38 @@ def load_voter_file(
         .observe(obs, F.count(F.lit(1)).alias("rows"))
     )
 
-    # Blue/green publish (load.ts:256-308): write the new snapshot to
-    # a hidden staging dir (a failure here leaves the live dir
-    # untouched), reconcile, then promote it with checked Hadoop-FS
-    # renames — not os.rename, so the same code serves file://,
-    # hdfs:// and s3a:// warehouses.
-    import uuid
-
+    # Blue/green publish (load.ts:256-308) through publish_swap: the
+    # new snapshot is staged in a hidden dir (a failure there leaves
+    # the live dir untouched), reconciled, and only then promoted.
     published_path = os.path.join(warehouse_dir, f"state={state}")
-    run_id = uuid.uuid4().hex[:12]
-    staging_path = os.path.join(warehouse_dir, f".staging_{state}_{run_id}")
-    retired_path = os.path.join(warehouse_dir, f".retired_{state}_{run_id}")
-    fs = mf._hadoop_fs(spark, warehouse_dir)
-    staging = mf._hpath(spark, staging_path)
-    try:
-        df.write.mode("overwrite").parquet(staging_path)
-    except BaseException:
-        fs.delete(staging, True)  # a failed job can leave its dir behind
-        raise
-    rows_read = int(obs.get["rows"])
 
-    # Reconciliation BEFORE the swap (load.ts:235-254): observed count
-    # vs manifest line count (header excluded), tolerance 1000. A miss
-    # gates the publish: the staged copy is dropped, live stays as is.
-    if expected_lines is None:
-        lines = mf.recorded_lines(spark, manifest_path, filename)
-        expected_lines = lines if lines is not None else rows_read + 1
-    expected_rows = max(expected_lines - 1, 0)  # minus header line
-    reconciled = rows_read >= expected_rows - COUNT_TOLERANCE
-    if reconciled:
-        mf.promote_staged(spark, staging_path, published_path, retired_path)
+    def reconciled(_staging: str) -> bool:
+        # Reconciliation BEFORE the swap (load.ts:235-254): observed
+        # count vs manifest line count (header excluded), tolerance
+        # 1000. A miss gates the publish; an unrecorded file has no
+        # count to miss.
+        lines = expected_lines
+        if lines is None:
+            lines = mf.recorded_lines(spark, manifest_path, filename)
+        rows = int(obs.get["rows"])
+        return lines is None or rows >= max(lines - 1, 0) - COUNT_TOLERANCE
+
+    published = publish.publish_swap(
+        spark,
+        published_path,
+        lambda staging: df.write.mode("overwrite").parquet(staging),
+        gate=reconciled,
+    )
+    rows_read = int(obs.get["rows"])
+    if published:
         mf.mark_loaded(spark, manifest_path, filename)
-    elif not fs.delete(staging, True):
-        raise IOError(f"could not drop gated staging dir {staging_path}")
 
     return LoadResult(
         filename=filename,
         state=state,
         rows_read=rows_read,
-        rows_published=rows_read if reconciled else 0,
-        reconciled=reconciled,
+        rows_published=rows_read if published else 0,
+        reconciled=published,
         published_path=published_path,
     )
 

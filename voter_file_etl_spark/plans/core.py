@@ -27,6 +27,7 @@ from pyspark.sql import types as T
 
 from voter_file_etl_spark.registry import register
 from voter_file_etl_spark.session import materialize
+from voter_file_etl_spark.sources.publish import publish_swap
 from voter_file_etl_spark.tables import t
 
 
@@ -650,8 +651,6 @@ _S13_N = 200
     """,
 )
 def s13_binary_source(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-
     docs = (
         t(spark, sf_dir, "documents")
         .select("doc_id", "text")
@@ -659,14 +658,14 @@ def s13_binary_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         .limit(_S13_N)
         .collect()  # bounded: exactly 200 rows regardless of SF
     )
-    stage = _S13_DIR + ".stage"
-    shutil.rmtree(stage, ignore_errors=True)
-    os.makedirs(stage)
-    for r in docs:
-        with open(os.path.join(stage, f"doc_{r['doc_id']:05d}.bin"), "wb") as fh:
-            fh.write(r["text"].encode("ascii"))
-    shutil.rmtree(_S13_DIR, ignore_errors=True)
-    os.replace(stage, _S13_DIR)
+
+    def write(stage: str) -> None:
+        os.makedirs(stage)
+        for r in docs:
+            with open(os.path.join(stage, f"doc_{r['doc_id']:05d}.bin"), "wb") as fh:
+                fh.write(r["text"].encode("ascii"))
+
+    publish_swap(spark, _S13_DIR, write)
 
     blobs = (
         spark.read.format("binaryFile")

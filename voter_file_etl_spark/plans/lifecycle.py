@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 
 from voter_file_etl_spark.registry import register
 from voter_file_etl_spark.session import materialize
+from voter_file_etl_spark.sources.publish import publish_swap
 from voter_file_etl_spark.tables import t
 
 # Every scratch dir this module creates (pristine LogTable builds and
@@ -978,10 +979,7 @@ _L20_N_BATCHES = 3
     """,
 )
 def l20_write_audit_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
-    work = _tmpdir("l20_wap_")
-    staging = os.path.join(work, "staging")
-    published = os.path.join(work, "published")
-    os.makedirs(published, exist_ok=True)
+    published = os.path.join(_tmpdir("l20_wap_"), "published")
     orders = t(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
     report = []
     for i in range(_L20_N_BATCHES):
@@ -996,18 +994,15 @@ def l20_write_audit_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .otherwise(F.col("o_totalprice"))
                 .alias("o_totalprice"),
             )
-        stage_dir = os.path.join(staging, f"batch={i}")
         # The audit rides the staging WRITE as observe() accumulators
         # (r13, the e3/e7 pattern — guide §1.2): the metrics are
         # computed over exactly the rows landing in the staged batch,
         # so the separate read-back aggregation job (one full scan of
-        # the just-written files per batch) is gone. The publish
-        # decision and the post-decision published read-back are
-        # unchanged.
+        # the just-written files per batch) is gone.
         from pyspark.sql import Observation
 
         obs = Observation(f"l20_audit_{i}")
-        batch.observe(
+        observed = batch.observe(
             obs,
             F.count(F.lit(1)).cast("long").alias("n_rows"),
             F.sum(
@@ -1020,10 +1015,12 @@ def l20_write_audit_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .cast("long")
             .alias("n_bad"),
-        ).write.mode("overwrite").parquet(stage_dir)
-        audit = obs.get
-        ok = audit["n_bad"] == 0
-        if ok:
+        )
+
+        def audited(stage: str) -> bool:
+            audit = obs.get
+            if audit["n_bad"] != 0:
+                return False
             # Write-audit-publish integrity (ADVICE r13): observe()
             # validates the rows IN FLIGHT; before publishing, verify
             # the PERSISTED files agree — a metadata-only count (the
@@ -1031,15 +1028,23 @@ def l20_write_audit_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
             # corrupt/partial staged write that in-flight metrics
             # cannot see, at a fraction of the old full-column
             # read-back aggregation this replaced in r13.
-            n_back = spark.read.parquet(stage_dir).count()
+            n_back = spark.read.parquet(stage).count()
             if n_back != audit["n_rows"]:
                 raise RuntimeError(
                     f"l20 staged batch {i}: persisted rows {n_back} != "
                     f"observed {audit['n_rows']} — refusing to publish"
                 )
-            # Atomic publish: same-filesystem rename of the staged
-            # batch directory into the published table.
-            os.rename(stage_dir, os.path.join(published, f"batch={i}"))
+            return True
+
+        # Atomic publish of the audited batch directory into the
+        # published table; a failed audit drops the staged batch.
+        ok = publish_swap(
+            spark,
+            os.path.join(published, f"batch={i}"),
+            lambda stage: observed.write.mode("overwrite").parquet(stage),
+            gate=audited,
+        )
+        audit = obs.get
         # Read back what a consumer of the published table sees NOW.
         if os.listdir(published):
             visible = spark.read.parquet(

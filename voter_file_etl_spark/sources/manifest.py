@@ -8,12 +8,14 @@ atomic publish.
 The manifest is a control-plane table of O(files) rows, so every
 operation the load path makes on it is a driver-side read-modify-write
 that submits no Spark job: the rows are read with pyarrow, merged,
-flipped or looked up in Python, and written back through a hidden
-staging dir promoted with checked Hadoop-FS renames. A Spark job here
-costs ~0.5 s of scheduling per call and queues behind the data-plane
-jobs of parallel load lanes while holding ``_MF_LOCK``; the pyarrow
-round-trip costs milliseconds. Warehouse URIs the pyarrow path cannot
-reach (non-local filesystems) read and write through Spark instead.
+flipped or looked up in Python, and written back through
+``publish.publish_swap``: a hidden staging dir promoted with checked
+Hadoop-FS renames, whose crash leftovers ``publish.recover`` cleans
+up before each read. A Spark job here costs ~0.5 s of scheduling per
+call and queues behind the data-plane jobs of parallel load lanes
+while holding ``_MF_LOCK``; the pyarrow round-trip costs
+milliseconds. Warehouse URIs the pyarrow path cannot reach (non-local
+filesystems) read and write through Spark instead.
 """
 
 from __future__ import annotations
@@ -26,6 +28,7 @@ from datetime import datetime, timedelta, timezone
 from pyspark.sql import DataFrame, SparkSession
 
 from voter_file_etl_spark.schema import manifest_struct
+from voter_file_etl_spark.sources import publish
 
 # Serializes manifest read-modify-write cycles when per-state loads
 # run in parallel driver threads (etl.run_load). The lock only covers
@@ -45,78 +48,16 @@ def _local_path(path: str) -> str | None:
     return None if "://" in path else path
 
 
-def _has_parquet(path: str) -> bool:
-    return os.path.isdir(path) and any(
-        n.endswith(".parquet") for n in os.listdir(path)
-    )
-
-
-def _sweep_staging_orphans(parent: str, keep_run_id: str | None = None) -> None:
-    """Remove crash-orphaned .mf_staging_* dirs next to the manifest.
-
-    A crash after the staging write but before (or between) the
-    promote renames leaves a .mf_staging_* dir that nothing ever
-    reads again (ADVICE r7 #2) — the live/retired dirs are the only
-    committed state. Safe under _MF_LOCK: in-process writers hold the
-    lock for their whole write+promote, so any staging dir seen here
-    (other than the caller's own, ``keep_run_id``) is a dead orphan.
-    Local filesystems only, like the fast path that creates them.
-    """
-    import shutil
-
-    if not os.path.isdir(parent):
-        return
-    for n in os.listdir(parent):
-        if n.startswith(".mf_staging_") and (
-            keep_run_id is None or not n.endswith(keep_run_id)
-        ):
-            shutil.rmtree(os.path.join(parent, n), ignore_errors=True)
-
-
-def _maybe_restore_retired(local: str) -> None:
-    """Close the promote crash window (VERDICT r6 "What's wrong" #2).
-
-    ``_overwrite_small`` promotes with two non-overwriting renames:
-    rename(live -> .mf_retired_<id>) then rename(.mf_staging_<id> ->
-    live). A driver crash between them leaves NO live manifest dir, but
-    the retired copy survives untouched. Restore the newest retired dir
-    (dir mtime = when its parquet content was written — renames don't
-    touch it, so newest-mtime IS the latest committed version) and
-    sweep ALL crash leftovers, including the orphaned staging dir whose
-    promote died (ADVICE r7 #2). Local filesystems only (``local`` is
-    an OS path); the Hadoop-FS fallback path never takes the pyarrow
-    write and its retired dir is deleted in the same JVM call sequence.
-    """
-    parent = os.path.dirname(local.rstrip("/")) or "."
-    if not os.path.isdir(parent):
-        return
-    cands = [
-        os.path.join(parent, n)
-        for n in os.listdir(parent)
-        if n.startswith(".mf_retired_")
-    ]
-    cands = [c for c in cands if _has_parquet(c)]
-    if not cands:
-        return
-    import shutil
-
-    newest = max(cands, key=os.path.getmtime)
-    os.rename(newest, local)
-    for stale in cands:
-        if stale != newest:
-            shutil.rmtree(stale, ignore_errors=True)
-    _sweep_staging_orphans(parent)
-
-
 def _exists(spark: SparkSession, path: str) -> bool:
-    """Whether a committed manifest is on disk (restoring the newest
-    retired copy first if a crashed promote left no live dir)."""
+    """Whether a committed manifest is on disk (after undoing what a
+    crashed promote left behind). Local manifests are checked with
+    os calls: this runs on every manifest operation under
+    ``_MF_LOCK``, and Hadoop-FS calls cost py4j round-trips there."""
     local = _local_path(path)
     if local is None:
-        return bool(_hadoop_fs(spark, path).exists(_hpath(spark, path)))
-    if not _has_parquet(local):
-        _maybe_restore_retired(local)
-    return _has_parquet(local)
+        return bool(publish.list_dir(spark, path))
+    publish.recover(local)
+    return os.path.isdir(local) and any(n.endswith(".parquet") for n in os.listdir(local))
 
 
 def read_manifest(spark: SparkSession, path: str) -> DataFrame:
@@ -275,55 +216,13 @@ def _arrow_type(dt):
     }.get(dt)
 
 
-def _hadoop_fs(spark: SparkSession, parent: str):
-    return spark._jvm.org.apache.hadoop.fs.Path(parent).getFileSystem(
-        spark._jsc.hadoopConfiguration()
-    )
-
-
-def _hpath(spark: SparkSession, p: str):
-    return spark._jvm.org.apache.hadoop.fs.Path(p)
-
-
-def promote_staged(spark: SparkSession, staging: str, live: str, retired: str) -> None:
-    """Blue/green promote of the fully written dir ``staging`` to
-    ``live``, checking every Hadoop-FS result: ``rename`` and
-    ``delete`` report failure by returning false, not by raising.
-
-    Parks the current live copy at ``retired``, renames staging into
-    place, verifies it, and only then deletes the parked copy. A
-    rename that returns false rolls back (the parked copy goes back to
-    ``live``, staging is dropped) and raises, so the previous version
-    stays live. An exception mid-promote (a crash) leaves both copies
-    on disk for recovery.
-    """
-    fs = _hadoop_fs(spark, os.path.dirname(live.rstrip("/")) or ".")
-
-    def _p(p: str):
-        return _hpath(spark, p)
-
-    parked = bool(fs.exists(_p(live)))
-    if parked and not fs.rename(_p(live), _p(retired)):
-        fs.delete(_p(staging), True)
-        raise IOError(f"publish: could not park {live} at {retired}")
-    if not (fs.rename(_p(staging), _p(live)) and fs.exists(_p(live))):
-        restored = not parked or fs.rename(_p(retired), _p(live))
-        fs.delete(_p(staging), True)
-        raise IOError(
-            f"publish: could not promote {staging} to {live}"
-            + ("" if restored else f"; previous version left at {retired}")
-        )
-    if parked and not fs.delete(_p(retired), True):
-        raise IOError(f"publish: could not delete retired copy {retired}")
-
-
 def _overwrite_small(spark: SparkSession, rows: list, schema, path: str) -> None:
     # Replace the table at ``path`` with ``rows`` (tuples in ``schema``
-    # order): write a hidden staging dir, then promote it with checked
-    # FS renames. The manifest is the system of record for Loaded
-    # flags — a bare overwrite deletes the live copy before the
-    # writing job commits, so a failure there would lose the entire
-    # load history (same hazard the etl.py publish guards against).
+    # order) through publish.publish_swap: a hidden staging dir,
+    # promoted with checked FS renames. The manifest is the system of
+    # record for Loaded flags — a bare overwrite deletes the live copy
+    # before the writing job commits, so a failure there would lose
+    # the entire load history.
     #
     # The write itself is a driver-side pyarrow file, not a Spark job:
     # this is a CONTROL-PLANE table of O(files) rows already on the
@@ -333,16 +232,8 @@ def _overwrite_small(spark: SparkSession, rows: list, schema, path: str) -> None
     # the second-largest cost of the whole ETL loop (r6). Same pattern
     # as Delta's driver-written transaction log. Falls back to the
     # Spark writer for non-local warehouse URIs or exotic schemas.
-    import uuid
-
-    run_id = uuid.uuid4().hex[:12]
-    parent = os.path.dirname(path.rstrip("/")) or "."
-    staging = os.path.join(parent, f".mf_staging_{run_id}")
-    retired = os.path.join(parent, f".mf_retired_{run_id}")
-
-    local_parent = _local_path(parent)
     arrow_types = [_arrow_type(f.dataType) for f in schema.fields]
-    if local_parent is not None and all(t is not None for t in arrow_types):
+    if _local_path(path) is not None and all(t is not None for t in arrow_types):
         import pyarrow as pa
         import pyarrow.parquet as pq
 
@@ -369,44 +260,25 @@ def _overwrite_small(spark: SparkSession, rows: list, schema, path: str) -> None
                 vals = [_ts_micros(v) for v in vals]
             return pa.array(vals, at)
 
-        local_staging = _local_path(staging)
         tbl = pa.table(
             {
                 f.name: _col(i, f, t)
                 for i, (f, t) in enumerate(zip(schema.fields, arrow_types))
             }
         )
-        os.makedirs(local_staging)
-        try:
-            pq.write_table(tbl, os.path.join(local_staging, "part-00000.parquet"))
-        except BaseException:
-            # Never leave an orphan staging dir (possibly holding a
-            # partial parquet) to accumulate next to the manifest
-            # (ADVICE r6 #4).
-            import shutil
 
-            shutil.rmtree(local_staging, ignore_errors=True)
-            raise
+        def write(staging: str) -> None:
+            local = _local_path(staging)
+            os.makedirs(local)
+            pq.write_table(tbl, os.path.join(local, "part-00000.parquet"))
     else:
         # repartition(1), NOT coalesce(1): a coalesce directly over a
         # Python-built local relation (Arrow LocalTableScan) costs
         # ~5 s per write on Spark 4.1 where the repartition path takes
         # ~0.5 s (measured; parquet-scan-backed coalesce unaffected).
-        try:
+        def write(staging: str) -> None:
             spark.createDataFrame(
                 _utc_aware_rows(rows, schema), schema
             ).repartition(1).write.parquet(staging)
-        except BaseException:
-            try:
-                _hadoop_fs(spark, parent).delete(_hpath(spark, staging), True)
-            except Exception:
-                pass  # best-effort cleanup; the write error is the story
-            raise
 
-    promote_staged(spark, staging, path, retired)
-    if local_parent is not None:
-        # A crash BEFORE any promote rename leaves the live dir intact,
-        # so the reader never takes the restore path that sweeps —
-        # clean such orphans on the next successful promote instead
-        # (ADVICE r7 #2). Our own staging dir was just renamed to live.
-        _sweep_staging_orphans(local_parent)
+    publish.publish_swap(spark, path, write)

@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from voter_file_etl_spark.registry import register
+from voter_file_etl_spark.sources import publish
 from voter_file_etl_spark.tables import ensure_session_confs, stream_parallelism, t
 
 _SRC_SCHEMA = T.StructType(
@@ -62,14 +63,16 @@ def upsert_merge_batch(
     rewriting only the buckets the batch's keys hash into.
 
     The replacement buckets are written ONCE (a staged partitionBy
-    write) and published with per-bucket atomic renames — the same
-    blue/green discipline the ETL publish and the LogTable commit use
-    — instead of the former stage -> read-back -> dynamic-partition-
-    overwrite pair, which wrote and re-read every touched row twice
-    per micro-batch (2 write jobs + 1 extra scan, per batch, at any
-    scale). A failure before the renames leaves the live snapshot
-    untouched; a crash between renames leaves a dot-prefixed retired
-    dir (invisible to Spark's listing), never silent loss.
+    write) and each staged ``_bucket=k`` dir replaces its live bucket
+    through ``publish.promote``, the checked Hadoop-FS swap the ETL
+    and manifest publishes share — instead of the former stage ->
+    read-back -> dynamic-partition-overwrite pair, which wrote and
+    re-read every touched row twice per micro-batch. A failed write
+    leaves the live snapshot untouched; a failed promote rolls its
+    bucket back and raises; a crash between renames leaves a hidden
+    retired dir, never silent loss. Buckets promoted before a failure
+    already hold the batch, and replaying it converges (last writer
+    wins).
 
     Survivor selection is a max(struct(order keys..., payload))
     aggregate, not a row_number window: struct comparison is the same
@@ -79,19 +82,9 @@ def upsert_merge_batch(
     the shuffle instead of every duplicate (the dedup_pk discipline,
     operators/etl.py).
     """
-    # All stage/promote filesystem traffic goes through the Hadoop FS
-    # API (VERDICT r13 #4): with file:// work dirs this is the same
-    # local rename/listing as before, but the identical code runs
-    # against hdfs:// (and, listing/mkdirs aside, any FS with atomic
-    # dir rename) — os.listdir/os.makedirs only ever see the driver's
-    # local disk, which on a cluster is NOT where the snapshot lives.
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    _p = jvm.org.apache.hadoop.fs.Path
-    fs = _p(snap_dir).getFileSystem(hconf)
     bucket = F.pmod(F.xxhash64(*_UPSERT_KEY), F.lit(_N_BUCKETS)).cast("int")
     batch = batch_df.withColumn("_bucket", bucket)
-    if fs.exists(_p(snap_dir)):
+    if any(n.startswith("_bucket=") for n in publish.list_dir(spark, snap_dir)):
         touched = sorted(
             r["_bucket"] for r in batch.select("_bucket").distinct().collect()
         )
@@ -119,21 +112,9 @@ def upsert_merge_batch(
     )
     stage = os.path.join(work_dir, f"stage_b{batch_id}")
     deduped.write.mode("overwrite").partitionBy("_bucket").parquet(stage)
-    # Publish via Hadoop-FS renames (file:// and hdfs:// atomic; an
-    # object-store sink would use the LogTable manifest commit).
-    fs.mkdirs(_p(snap_dir))
-    staged = sorted(
-        st.getPath().getName() for st in fs.listStatus(_p(stage))
-    )
-    for d in staged:
-        if not d.startswith("_bucket="):
-            continue
-        live = os.path.join(snap_dir, d)
-        retired = os.path.join(snap_dir, f".retired_{d}_b{batch_id}")
-        if fs.exists(_p(live)):
-            fs.rename(_p(live), _p(retired))  # park old (atomic)
-        fs.rename(_p(os.path.join(stage, d)), _p(live))  # promote new
-        fs.delete(_p(retired), True)
+    for d in publish.list_dir(spark, stage):
+        if d.startswith("_bucket="):
+            publish.promote(spark, os.path.join(stage, d), os.path.join(snap_dir, d))
 
 
 def run_upsert_stream(spark: SparkSession, sf_dir: str, work_dir: str) -> DataFrame:
