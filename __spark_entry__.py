@@ -38,27 +38,7 @@ SF_SMOKE = "/root/testdata/sf0.001"
 # _CHECK_FIRST for its first check before entering the cycle).
 # ---------------------------------------------------------------------------
 _CHECK_FIRST = [
-    # r14 window: oldest greens after the r13 retire (generated by tools/rotate_window.py --write)
-    "w10_gaps_islands", "w11_resample_ffill", "w12_cumulative_distinct",
-    "t10_stem_stopword", "t12_hash_encode", "t13_date_arith",
-    "j12_full_outer_join", "x54_reservoir_sample", "j17_knn_join",
-    "g4_connected_components", "x55_embedding_outlier",
-    "j18_skew_salted_join", "x56_ngram_novelty", "m14_phash_near_dup",
-    "a35_mad_outliers", "x57_token_budget_fill", "x58_diversity_sample",
-    "f7_ipv4_funcs", "t14_bitwise_funcs", "sql10_qualify_topn",
-    "w13_moving_median", "a36_ks_two_sample", "x59_quantile_normalize",
-    "x60_winsorize", "x61_shard_balance", "j19_edit_distance_join",
-    "d4_record_linkage", "g5_degree_distribution", "a37_chi_square",
-    "a38_lag_autocovariance", "x62_langid_confusion", "f8_hash_digest_funcs",
-    "o5_nulls_ordering", "w14_drawdown", "j20_star_denorm", "w15_ewma",
-    "a39_gini", "a40_conversion_lag", "f9_url_parse", "t15_unicode_sanitize",
-    "x63_bloom_prefilter", "x64_token_shift", "s17_compressed_csv",
-    "a41_ols_trend", "t16_json_nested", "d5_golden_record",
-    "x65_vocab_coverage", "sql11_pivot_syntax", "f10_phonetic_key",
-    "a42_sketch_overlap",
-]
-_BACKFILL = [
-    # -- driver-green round 6 (retired window, CORRECTNESS_r06 50/50) --
+    # r15 window: oldest greens after the r14 retire (generated by tools/rotate_window.py --write)
     "j21_asof_tolerance", "x66_tokenizer_fertility",
     "x67_cluster_size_profile", "f11_email_normalize", "w16_moving_slope",
     "s18_multiline_json", "g6_common_neighbors", "m15_image_channel_stats",
@@ -73,19 +53,22 @@ _BACKFILL = [
     "a47_ratio_to_report", "w18_resample_bfill", "d6_blocking_recall",
     "m18_wav_decimate", "st16_stream_distinct_users", "l19_shallow_clone",
     "w19_interval_union", "a49_market_basket", "st15_transform_with_state",
-    # -- driver-green round 7 (retired window, CORRECTNESS_r07 50/50) --
     "a48_string_agg", "sql15_unpivot_syntax", "x72_length_bucket_pack",
     "x73_calibration_curve", "l20_write_audit_publish", "w20_cusum_drift",
     "f13_luhn_checksum", "x74_source_js_divergence",
-    "l21_concurrent_merge_retry", "s20_bloom_filter_pointread",
-    "a50_rfm_segmentation", "x75_code_data_filter", "sql16_join_hints",
-    "l22_log_checkpoint", "w21_rolling_corr", "f14_timezone_localize",
-    "x77_dp_noisy_release", "sql17_group_by_all", "x78_bm25_scoring",
-    "a52_kaplan_meier", "a53_holt_forecast", "s21_corrupt_file_recovery",
-    "a54_referential_audit", "st17_stream_cusum", "p11_transpose",
-    "e4_entity_resolution", "u7_intersect_all", "x79_dataset_card",
-    "a55_pareto_share", "l23_retention_vacuum", "w22_sigma_anomaly_days",
-    "w23_mom_change", "a57_new_vs_returning", "x81_embedding_norm_audit",
+    "l21_concurrent_merge_retry",
+]
+_BACKFILL = [
+    # -- driver-green round 7 (retired window, CORRECTNESS_r07 50/50) --
+    "s20_bloom_filter_pointread", "a50_rfm_segmentation",
+    "x75_code_data_filter", "sql16_join_hints", "l22_log_checkpoint",
+    "w21_rolling_corr", "f14_timezone_localize", "x77_dp_noisy_release",
+    "sql17_group_by_all", "x78_bm25_scoring", "a52_kaplan_meier",
+    "a53_holt_forecast", "s21_corrupt_file_recovery", "a54_referential_audit",
+    "st17_stream_cusum", "p11_transpose", "e4_entity_resolution",
+    "u7_intersect_all", "x79_dataset_card", "a55_pareto_share",
+    "l23_retention_vacuum", "w22_sigma_anomaly_days", "w23_mom_change",
+    "a57_new_vs_returning", "x81_embedding_norm_audit",
     "s22_glob_recursive_scan", "w24_rank_migration", "a58_repeat_intervals",
     "x80_zipf_check", "j22_bracket_lookup", "a56_abc_analysis",
     "g8_degree_assortativity", "x82_prefix_reuse", "w25_local_peaks",
@@ -200,6 +183,24 @@ _BACKFILL = [
     "a21_column_profile", "a22_funnel", "a23_retention_cohorts",
     "a24_sweepline_concurrency", "a27_key_skew_profile",
     "a28_hll_sketch_merge", "w9_nth_value",
+    # -- driver-green round 14 (retired window, CORRECTNESS_r14 50/50) --
+    "w10_gaps_islands", "w11_resample_ffill", "w12_cumulative_distinct",
+    "t10_stem_stopword", "t12_hash_encode", "t13_date_arith",
+    "j12_full_outer_join", "x54_reservoir_sample", "j17_knn_join",
+    "g4_connected_components", "x55_embedding_outlier",
+    "j18_skew_salted_join", "x56_ngram_novelty", "m14_phash_near_dup",
+    "a35_mad_outliers", "x57_token_budget_fill", "x58_diversity_sample",
+    "f7_ipv4_funcs", "t14_bitwise_funcs", "sql10_qualify_topn",
+    "w13_moving_median", "a36_ks_two_sample", "x59_quantile_normalize",
+    "x60_winsorize", "x61_shard_balance", "j19_edit_distance_join",
+    "d4_record_linkage", "g5_degree_distribution", "a37_chi_square",
+    "a38_lag_autocovariance", "x62_langid_confusion", "f8_hash_digest_funcs",
+    "o5_nulls_ordering", "w14_drawdown", "j20_star_denorm", "w15_ewma",
+    "a39_gini", "a40_conversion_lag", "f9_url_parse", "t15_unicode_sanitize",
+    "x63_bloom_prefilter", "x64_token_shift", "s17_compressed_csv",
+    "a41_ols_trend", "t16_json_nested", "d5_golden_record",
+    "x65_vocab_coverage", "sql11_pivot_syntax", "f10_phonetic_key",
+    "a42_sketch_overlap",
 ]
 
 

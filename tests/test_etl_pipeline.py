@@ -321,7 +321,7 @@ def test_manifest_control_plane_submits_no_jobs(spark, tmp_path):
         mf.record_files(spark, mfp, [(n, st, 6) for _, n, st in files])
         assert mf.recorded_lines(spark, mfp, "02--TX--20250101.tab") == 6
         mf.mark_loaded(spark, mfp, "01--CA--20250101.tab")
-        page = mf.pending_files(spark, mfp, files, after_seq=None, limit=10)
+        page = mf.pending_files(spark, mfp, files)
         jobs = list(sc.statusTracker().getJobIdsForGroup(group))
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
@@ -352,14 +352,10 @@ def test_pyarrow_reader_reads_spark_written_manifest(spark, tmp_path):
     assert {r["updatedAt"].astimezone(timezone.utc) for r in rows} == {ts}
 
 
-def test_run_load_pages_pending_files(spark, tmp_path, monkeypatch):
-    # Driver-side state is bounded: run_load consumes the pending list
-    # through a seq cursor in _PENDING_BATCH-row pages. With the bound
-    # forced to 2 and 5 pending files, the loop must page 3 times and
-    # still load everything exactly once, in numeric order — and a
-    # file that fails reconciliation (stays pending in the manifest)
-    # must not re-enter a later page (strict cursor, so the loop
-    # terminates).
+def test_run_load_pages_pending_files(spark, tmp_path):
+    # run_load must load every pending file exactly once, in numeric
+    # order, and a file that fails reconciliation must stay pending in
+    # the manifest for the next run.
     files_dir = tmp_path / "files"
     files_dir.mkdir()
     states = ["CA", "WY", "TX", "AZ", "NV"]
@@ -377,7 +373,6 @@ def test_run_load_pages_pending_files(spark, tmp_path, monkeypatch):
         # tolerance (load.ts:235-254), so its load must fail
         [(n, n.split("--")[1], 99999 if n.startswith("03") else 6) for n in names],
     )
-    monkeypatch.setattr(etl, "_PENDING_BATCH", 2)
     results = etl.run_load(spark, str(files_dir), wh, mfp)
     assert [r.state for r in results] == states  # numeric order, once each
     assert [r.reconciled for r in results] == [True, True, False, True, True]
@@ -517,29 +512,6 @@ def test_manifest_overwrite_failure_preserves_live_copy(spark, tmp_path, monkeyp
     assert leftovers == [], f"crash leftovers not swept: {leftovers}"
 
 
-def test_overwrite_small_spark_fallback_for_exotic_schema(spark, tmp_path):
-    # Schemas outside the pyarrow fast-path type map (here: an array
-    # column) must take the Spark-writer branch and still round-trip
-    # through the same blue/green rename promotion.
-    from pyspark.sql import functions as F  # noqa: F811
-    from voter_file_etl_spark.sources.manifest import _overwrite_small
-
-    path = str(tmp_path / "exotic")
-    df = spark.createDataFrame(
-        [("a", [1, 2]), ("b", [3])], "k string, vals array<int>"
-    )
-    _overwrite_small(spark, df.collect(), df.schema, path)
-    back = spark.read.parquet(path)
-    assert sorted((r["k"], r["vals"]) for r in back.collect()) == [
-        ("a", [1, 2]),
-        ("b", [3]),
-    ]
-    # overwrite again (exercises the retire/promote pair on an
-    # existing live dir)
-    _overwrite_small(spark, back.filter("k = 'a'").collect(), back.schema, path)
-    assert spark.read.parquet(path).count() == 1
-
-
 def test_run_load_lane_failure_propagates(spark, tmp_path, monkeypatch):
     # A lane that blows up mid-load (corrupt row -> FAILFAST during
     # the staging write) must surface the error to the caller — no
@@ -581,6 +553,36 @@ def test_run_load_lane_failure_propagates(spark, tmp_path, monkeypatch):
     # manifest staging/retired dirs next to the manifest
     leftovers = [n for n in os.listdir(str(tmp_path)) if n.startswith(_MF_LEFTOVER)]
     assert leftovers == [], f"crash leftovers not swept: {leftovers}"
+
+
+def test_run_load_recovers_crashed_state_publish(spark, tmp_path):
+    # A crash between promote's two renames leaves a state with no live
+    # dir and its previous snapshot parked at .retired_state=XX_<id>; a
+    # killed staging write leaves .staging_state=XX_<id>. The next
+    # run_load of that state must clear both before it loads: the new
+    # file's rows go live and neither leftover survives.
+    import shutil
+
+    files_dir = tmp_path / "files"
+    files_dir.mkdir()
+    wh, mfp = tmp_path / "wh", str(tmp_path / "manifest")
+    old = "01--TX--20250101.tab"
+    (files_dir / old).write_text(HEADER + "\n" + "\n".join(_row(j, "TX") for j in range(3)) + "\n")
+    mf.record_files(spark, mfp, [(old, "TX", 4)])
+    etl.run_load(spark, str(files_dir), str(wh), mfp)
+    live = wh / "state=TX"
+    shutil.copytree(live, wh / ".staging_state=TX_0123456789ab")
+    os.rename(live, wh / ".retired_state=TX_ba9876543210")
+
+    new = "02--TX--20250202.tab"
+    (files_dir / new).write_text(HEADER + "\n" + "\n".join(_row(j, "TX") for j in range(10, 15)) + "\n")
+    mf.record_files(spark, mfp, [(new, "TX", 6)])
+    results = etl.run_load(spark, str(files_dir), str(wh), mfp)
+    assert [(r.filename, r.reconciled) for r in results] == [(new, True)]
+    got = sorted(r["LALVOTERID"] for r in etl.read_voters(spark, str(wh)).collect())
+    assert got == [f"LALTX{j:07d}" for j in range(10, 15)]
+    leftovers = [n for n in os.listdir(wh) if n.startswith((".staging_state=TX_", ".retired_state=TX_"))]
+    assert leftovers == [], leftovers
 
 
 def test_promote_crash_between_renames_restores_history(spark, tmp_path, monkeypatch):
@@ -635,41 +637,19 @@ def test_promote_crash_between_renames_restores_history(spark, tmp_path, monkeyp
     assert mf.read_manifest(spark, mfp).filter("Loaded").count() == 1
 
 
-def test_record_files_result_survives_concurrent_overwrite(spark, tmp_path):
-    # ADVICE r6 #3: the DataFrame record_files returns must be safe to
-    # collect AFTER a later overwrite renamed the backing parquet away
-    # (parallel lanes do exactly this). It is materialized under
-    # _MF_LOCK as a local relation, so the rename cannot yank its files.
-    mfp = str(tmp_path / "manifest")
-    out = mf.record_files(spark, mfp, [("01--CA--20250101.tab", "CA", 10)])
-    # two full rewrite cycles: the original part files are gone
-    mf.mark_loaded(spark, mfp, "01--CA--20250101.tab")
-    mf.record_files(spark, mfp, [("02--TX--20250101.tab", "TX", 5)])
-    rows = out.collect()  # would raise FileNotFound on a lazy plan
-    assert [(r["Filename"], r["Loaded"]) for r in rows] == [
-        ("01--CA--20250101.tab", False)
-    ]
-
-
 def test_record_files_snapshot_collectable_under_live_parallel_overwrites(
     spark, tmp_path
 ):
-    # VERDICT r7 "Next round" #7: pin the returned-DataFrame contract
-    # under REAL concurrency, not just sequential rewrites — collect
-    # the snapshot repeatedly WHILE parallel lanes (the etl.run_load
+    # VERDICT r7 "Next round" #7: parallel lanes (the etl.run_load
     # threading model) churn the manifest with record_files/mark_loaded
-    # overwrite-rename cycles. The snapshot is a local relation
-    # materialized under _MF_LOCK, so no collect may ever see a
-    # FileNotFound from a rename, and its contents are frozen at
-    # record time regardless of later writes.
+    # overwrite-rename cycles; _MF_LOCK must serialize them so that no
+    # write is lost and no cycle fails.
     import threading
 
     mfp = str(tmp_path / "manifest")
-    snap = mf.record_files(spark, mfp, [("00--CA--20250101.tab", "CA", 7)])
-    expected = [("00--CA--20250101.tab", False, 7)]
+    mf.record_files(spark, mfp, [("00--CA--20250101.tab", "CA", 7)])
 
     errors: list[BaseException] = []
-    stop = threading.Event()
 
     def churn(lane: int) -> None:
         try:
@@ -679,25 +659,13 @@ def test_record_files_snapshot_collectable_under_live_parallel_overwrites(
                 mf.mark_loaded(spark, mfp, fn)
         except BaseException as exc:  # noqa: BLE001
             errors.append(exc)
-        finally:
-            stop.set()
 
     lanes = [threading.Thread(target=churn, args=(n,)) for n in (1, 2, 3)]
     for t in lanes:
         t.start()
-    collects = 0
-    try:
-        while not stop.is_set() or collects == 0:
-            got = [
-                (r["Filename"], r["Loaded"], r["Lines"]) for r in snap.collect()
-            ]
-            assert got == expected, f"snapshot drifted under churn: {got}"
-            collects += 1
-    finally:
-        for t in lanes:
-            t.join()
+    for t in lanes:
+        t.join()
     assert not errors, errors
-    assert collects >= 1
     # the lanes' writes all landed despite the churn (lock integrity)
     final = mf.read_manifest(spark, mfp)
     assert final.count() == 1 + 3 * 6
@@ -750,7 +718,7 @@ def test_overwrite_small_fast_path_matches_spark_writer_on_nonutc_os_tz(
         slow = str(tmp_path / "mf_slow")
         rows = df.collect()  # naive driver-OS-local wall times
         _overwrite_small(spark, rows, df.schema, fast)
-        monkeypatch.setattr(mf, "_arrow_type", lambda dt: None)  # force fallback
+        monkeypatch.setattr(publish, "local_path", lambda p: None)  # the Spark writer
         _overwrite_small(spark, rows, df.schema, slow)
         monkeypatch.undo()
     finally:

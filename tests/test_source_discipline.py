@@ -34,6 +34,11 @@ def _py_sources():
 
 _RAW_LOCAL_CHECKPOINT = re.compile(r"\.\s*localCheckpoint\s*\(")
 _RAW_RENAME = re.compile(r"(?:\bos\s*\.\s*(?:rename|replace)|fs\s*\.\s*rename)\s*\(")
+# An environment read, except the temp-dir lookup (``TMPDIR``).
+_ENV_READ = re.compile(
+    r"\bos\s*\.\s*(?:environ|getenv)\b"
+    r"(?!\s*(?:\.\s*get\s*\(|\[|\()\s*[\"']TMPDIR[\"'])"
+)
 
 
 def _raw_call_lines(source: str, pattern: re.Pattern) -> list[int]:
@@ -103,6 +108,32 @@ def test_no_raw_rename_outside_publish():
     assert not offenders, (
         "raw rename call sites outside sources/publish.py — publish "
         f"through publish.publish_swap/promote: {offenders}"
+    )
+
+
+def test_no_env_knobs_outside_session():
+    # Configuration read from the environment lives in session.py, the
+    # one place that documents and applies it. A knob read anywhere
+    # else in the engine is a setting no caller sees; only the
+    # temp-dir lookup is exempt.
+    assert _raw_call_lines(
+        'a = os.environ.get("SPARK_X", "8")\n'
+        'b = os.environ.get("TMPDIR", "/tmp")\n'
+        'c = os.getenv("X")\n'
+        'd = os . environ ["X"]\n'
+        'e = os.getenv("TMPDIR")  # os.environ["X"]\n'
+        'f = os.environ\n',
+        _ENV_READ,
+    ) == [1, 3, 4, 6]
+    offenders = []
+    for path in _py_sources():
+        if os.path.basename(path) == "session.py":
+            continue
+        with open(path) as f:
+            offenders += [f"{path}:{n}" for n in _raw_call_lines(f.read(), _ENV_READ)]
+    assert not offenders, (
+        "environment reads outside session.py — add the setting to "
+        f"session.py or make it a constant: {offenders}"
     )
 
 

@@ -13,11 +13,11 @@ manifest. Here the data plane is one declarative plan per file:
     -> reconcile, then RENAME-swap live (blue/green)
     -> mark manifest Loaded
 
-The control plane (directory listing, the already-loaded skip, the
-manifest lookups and updates) runs on the driver and submits no Spark
-jobs: the manifest is O(files) rows read and written with pyarrow
-(sources/manifest.py), so the only jobs a load submits are its own
-data-plane jobs.
+The control plane (one directory listing, one already-loaded skip
+over it, the manifest lookups and updates) runs on the driver and
+submits no Spark jobs: the manifest is O(files) rows read and written
+with pyarrow (sources/manifest.py), so the only jobs a load submits
+are its own data-plane jobs.
 
 Scale notes: per-state loads are independent jobs; within a load the
 only wide op is dropDuplicates (hash shuffle on the PK) — everything
@@ -37,8 +37,11 @@ checked Hadoop-FS renames after both succeeded: a job failure or a
 reconciliation miss leaves the old snapshot being served. The rename
 pair (park old, promote new) is atomic per rename on HDFS/local FS; a
 rename that reports failure is rolled back, and a crash exactly
-between them leaves both versions on disk, recoverable — never silent
-loss. With Delta/Iceberg the same flow is one transactional replace.
+between them leaves both versions on disk — never silent loss: the
+next ``run_load`` of that state restores the parked snapshot and
+sweeps the dead staging dir (``publish.recover``, local warehouses)
+before it loads. With Delta/Iceberg the same flow is one
+transactional replace.
 """
 
 from __future__ import annotations
@@ -141,7 +144,7 @@ def load_voter_file(
 
     obs = Observation(f"load_{filename}")
     df = (
-        read_tsv(spark, file_path, strict=True)
+        read_tsv(spark, file_path)
         .transform(enrich)
         .transform(dedup_pk)
         .observe(obs, F.count(F.lit(1)).alias("rows"))
@@ -183,12 +186,6 @@ def load_voter_file(
     )
 
 
-# Page size of the pending-file list: run_load takes work in
-# seq-ordered pages of this size (a cursor on seq) and re-reads the
-# manifest's loaded set between pages, so one round's lane fan-out and
-# result list stay O(page) however many files the directory holds.
-_PENDING_BATCH = 10_000
-
 # Concurrent per-state load lanes. The reference's ordering contract
 # is per-STATE, not global: each state's table is truncated and
 # rebuilt from that state's files in numeric order (load.ts:79-113);
@@ -200,7 +197,7 @@ _PENDING_BATCH = 10_000
 # = max(state) + scheduler overlap. Manifest read-modify-writes are
 # serialized by manifest._MF_LOCK; the heavy work (scan, cast, dedup
 # shuffle, parquet write) holds no lock.
-_STATE_LANES = int(os.environ.get("SPARK_GRAFT_LOAD_LANES", "8"))
+_STATE_LANES = 8
 
 
 def run_load(
@@ -211,19 +208,15 @@ def run_load(
 ) -> list[LoadResult]:
     """The full §3.1 loop: scan dir, skip DEMOGRAPHIC + already-loaded,
     load each remaining file in numeric order within its state, states
-    in parallel.
+    in parallel; results in global numeric order.
 
     The control plane runs on the driver and submits no Spark jobs: the
-    directory is listed once, and each pending page is computed in
-    Python from that listing and the manifest's loaded set
-    (``mf.pending_files``). Pages are consumed through a seq cursor in
-    ``_PENDING_BATCH``-file pages, strictly advancing, so the loop
-    terminates in ceil(pending / batch) rounds even when a file fails
-    reconciliation and stays unloaded in the manifest. File naming
-    guarantees unique seq prefixes (utils.ts:18-23 sorts on them), so
-    a strict cursor skips nothing. A state whose files span a page
-    boundary stays ordered: pages are processed one at a time, lanes
-    join at each boundary.
+    directory is listed once and the pending list is computed once, in
+    Python, from that listing and the manifest's loaded set
+    (``mf.pending_files``). A file that fails reconciliation stays
+    unloaded in the manifest, so the next run picks it up. Each lane
+    first clears what a crashed publish of its state left behind
+    (``publish.recover``: restores a parked snapshot, sweeps staging).
     """
     from concurrent.futures import ThreadPoolExecutor
 
@@ -234,45 +227,33 @@ def run_load(
         if n.endswith(".tab") and "DEMOGRAPHIC" not in n
     ]
     files = sorted((int(n.split("--")[0]), n, n.split("--")[1]) for n in names)
-    results: list[LoadResult] = []
-    last_seq = None
-    while True:
-        batch = mf.pending_files(
-            spark, manifest_path, files, after_seq=last_seq, limit=_PENDING_BATCH
-        )
-        if not batch:
-            return results
-        lanes: dict[str, list[str]] = {}
-        for _, name, state in batch:
-            lanes.setdefault(state, []).append(name)
+    lanes: dict[str, list[str]] = {}
+    for _, name, state in mf.pending_files(spark, manifest_path, files):
+        lanes.setdefault(state, []).append(name)
 
-        def _run_lane(names: list[str]) -> list[LoadResult]:
-            return [
-                load_voter_file(
-                    spark,
-                    os.path.join(files_dir, name),
-                    warehouse_dir,
-                    manifest_path,
-                )
-                for name in names
-            ]
-
-        if len(lanes) == 1:
-            lane_results = [_run_lane(next(iter(lanes.values())))]
-        else:
-            with ThreadPoolExecutor(
-                max_workers=min(_STATE_LANES, len(lanes))
-            ) as pool:
-                lane_results = list(pool.map(_run_lane, lanes.values()))
-        # Deterministic result order regardless of lane interleaving:
-        # global seq order, same as the old sequential loop reported.
-        results.extend(
-            sorted(
-                (res for lane in lane_results for res in lane),
-                key=lambda r: int(r.filename.split("--")[0]),
+    def _run_lane(state: str, names: list[str]) -> list[LoadResult]:
+        publish.recover(os.path.join(warehouse_dir, f"state={state}"))
+        return [
+            load_voter_file(
+                spark,
+                os.path.join(files_dir, name),
+                warehouse_dir,
+                manifest_path,
             )
-        )
-        last_seq = batch[-1][0]
+            for name in names
+        ]
+
+    if len(lanes) <= 1:
+        lane_results = [_run_lane(*lane) for lane in lanes.items()]
+    else:
+        with ThreadPoolExecutor(max_workers=min(_STATE_LANES, len(lanes))) as pool:
+            lane_results = list(pool.map(_run_lane, lanes.keys(), lanes.values()))
+    # Deterministic result order regardless of lane interleaving:
+    # global seq order.
+    return sorted(
+        (res for lane in lane_results for res in lane),
+        key=lambda r: int(r.filename.split("--")[0]),
+    )
 
 
 def read_voters(spark: SparkSession, warehouse_dir: str) -> DataFrame:

@@ -35,6 +35,13 @@ def _hpath(spark: SparkSession, p: str):
     return spark._jvm.org.apache.hadoop.fs.Path(p)
 
 
+def local_path(path: str) -> str | None:
+    """The OS path of a local-filesystem URI, None for any other FS."""
+    if path.startswith("file://"):
+        return path[7:]
+    return None if "://" in path else path
+
+
 def _split(live: str) -> tuple[str, str]:
     parent, name = os.path.split(live.rstrip("/"))
     return parent or ".", name
@@ -115,15 +122,20 @@ def publish_swap(
 
 
 def recover(live: str) -> None:
-    """Clean up what crashed publishes left next to ``live`` (a local
-    OS path). A crash between ``promote``'s renames leaves no live dir
-    but an intact parked copy: restore the newest ``.retired_`` sibling
-    (renames keep a dir's mtime, so newest = last committed). Every
-    other ``.staging_``/``.retired_`` sibling of ``live`` is a dead
-    orphan and is removed; other live dirs' siblings are untouched.
-    Callers serialize against writers (the manifest holds ``_MF_LOCK``).
+    """Clean up what crashed publishes left next to ``live``. A crash
+    between ``promote``'s renames leaves no live dir but an intact
+    parked copy: restore the newest ``.retired_`` sibling (renames keep
+    a dir's mtime, so newest = last committed). Every other
+    ``.staging_``/``.retired_`` sibling of ``live`` is a dead orphan and
+    is removed; other live dirs' siblings are untouched. A ``live`` on
+    a non-local filesystem is left alone. Callers serialize against
+    writers (the manifest holds ``_MF_LOCK``; a voter state is
+    recovered by its own load lane).
     """
-    parent, name = _split(live)
+    local = local_path(live)
+    if local is None:
+        return
+    parent, name = _split(local)
     if not os.path.isdir(parent):
         return
     own = re.compile(rf"\.(?:staging|retired)_{re.escape(name)}_[0-9a-f]{{12}}")

@@ -6,8 +6,11 @@ Reference behavior being ported (SURVEY.md §2.1-§2.3):
   (load.ts:159-165 mapHeaders) — here: read everything as string,
   then select the declared columns; Catalyst prunes the rest before
   any downstream op;
-- strict cell-count parse (load.ts:164) -> FAILFAST; the S3 path is
-  permissive (load-s3.ts:218-228) -> PERMISSIVE;
+- strict cell-count parse (load.ts:164) -> FAILFAST, on every path
+  that reads through here (the local load and the object-store load,
+  sources/object_store.py); the S3 reference's permissive parse
+  (load-s3.ts:218-228) is ported as PERMISSIVE by s10_permissive_read
+  (plans/core.py);
 - empty string -> NULL (load.ts:31-34) -> nullValue "";
 - typed casts from the declared schema (load.ts:36-42): int via cast,
   dates via to_date with the MM/dd/yyyy input format
@@ -31,11 +34,9 @@ def read_tsv(
     spark: SparkSession,
     path: str,
     fields: dict[str, T.DataType] | None = None,
-    strict: bool = True,
-    with_filename: bool = False,
 ) -> DataFrame:
-    """Read TSV file(s) at ``path``, project to the declared schema,
-    normalize empty strings to NULL, and cast types.
+    """Read TSV file(s) at ``path`` (FAILFAST), project to the declared
+    schema, normalize empty strings to NULL, and cast types.
 
     Unknown input columns are dropped (mapHeaders semantics); declared
     columns missing from the input come back as NULL (the input may be
@@ -47,7 +48,7 @@ def read_tsv(
         spark.read.option("sep", "\t")
         .option("header", True)
         .option("nullValue", "")
-        .option("mode", "FAILFAST" if strict else "PERMISSIVE")
+        .option("mode", "FAILFAST")
         .csv(path)
     )
     # Header trim (load.ts:162), projection, and casts all happen in a
@@ -95,10 +96,6 @@ def read_tsv(
             # matching the reference's permissive Number(value) cast
             # (load.ts:36-42).
             exprs.append(f"try_cast({src} AS {dtype.simpleString()}) AS {tgt}")
-    if with_filename:
-        exprs.append(
-            "element_at(split(input_file_name(), '/'), -1) AS `_source_file`"
-        )
     return raw.selectExpr(*exprs)
 
 
